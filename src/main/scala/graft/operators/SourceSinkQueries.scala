@@ -1023,11 +1023,13 @@ object SourceSinkQueries {
     writeSlices(bucketed, "bkt", keepSliceCol = false, 4, tbl, "h",
       "o_orderkey")
     val files = (0 until 4).flatMap(q => TxnLog.parquetsUnder(tbl, s"h$q"))
+    val stats = graft.sources.WriterStats.scan(spark, tbl, files,
+      graft.sources.WriterStats.footerSpec(spark, tbl, files,
+        graft.sources.WriterStats.Declared(
+          Some("o_orderkey"), Seq("h", "cents"))))
     TxnLog.commitRetryWith(tbl, _ => TxnLog.Manifest(0L, -1L, "create",
-      files, TxnLog.keyStats(spark, tbl, files, "o_orderkey"),
-      statsKey = Some("o_orderkey"),
-      colStats = TxnLog.colStatsFor(spark, tbl, files,
-        Seq("h", "cents"))))
+      files, stats.key, statsKey = Some("o_orderkey"),
+      colStats = stats.colStats))
     val (lo, hi) = (hmn + hspan * 30 / 100, hmn + hspan * 40 / 100)
     val inRange = graft.sources.GraftTables.read(spark, tbl)
       .filter(col("h").between(lo, hi))
@@ -3327,7 +3329,8 @@ object SourceSinkQueries {
     // 1)`) measured ~15 µs/row — past codegen comfort — and
     // repartitionByRange evaluates the projection twice (sampling +
     // shuffle). BucketIndex is output-identical for every input
-    // (ties, NULL→0, NaN→0; ZOrderSpec pins it against the chain).
+    // (ties, NULL→0, NaN→cuts.length since NaN sorts above every
+    // non-NaN cut; ZOrderSpec pins it against the chain).
     def bucketCol(c: org.apache.spark.sql.Column,
         cuts: Array[Double]): org.apache.spark.sql.Column =
       graft.functions.ZOrder.bucketIndexCol(c, cuts)

@@ -9,6 +9,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.{StagedWrite, WriterStats}
+
 /** A versioned transaction log for a parquet table directory — the
   * commit protocol the lakehouse ops ([[SourceSinkQueries.mergeCow]]
   * COW, snapshot reads, vacuum) previously improvised from directory
@@ -1048,29 +1050,15 @@ object TxnLog {
   }
 
   /** Per-file [min, max] of `key` for the given (relative) files — the
-    * stats a commit carries so later MERGEs plan from metadata. One
-    * key-column scan of exactly those files. A file whose key column
-    * is entirely NULL yields the EXPLICIT [[EmptyRange]] entry — its
-    * emptiness is a known fact (NULL keys never equi-join, so pruning
-    * it is correct), and under the [[Manifest]] stats convention only
-    * an explicit entry may prune. A zero-row file produces no group
-    * at all and therefore no entry (= unknown, never pruned). */
+    * stats a commit carries so later MERGEs plan from metadata; one
+    * key-column read-back scan ([[graft.sources.WriterStats.scan]],
+    * whose conventions apply: an all-NULL key column gets the explicit
+    * [[EmptyRange]] entry, a zero-row file no entry). */
   def keyStats(
       spark: SparkSession, table: Path, files: Seq[String],
-      key: String): Map[String, (Long, Long)] = {
-    import org.apache.spark.sql.functions._
-    if (files.isEmpty) Map.empty
-    else graft.util.ParquetSchema.read(spark,
-        files.map(f => table.resolve(f).toString))
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"))
-      .collect()
-      .map { r =>
-        val rel = attributeFile(table, r.getString(0), files)
-        if (r.isNullAt(1) || r.isNullAt(2)) rel -> EmptyRange
-        else rel -> (r.getLong(1), r.getLong(2))
-      }.toMap
-  }
+      key: String): Map[String, (Long, Long)] =
+    WriterStats.scan(spark, table, files, WriterStats.footerSpec(
+      spark, table, files, WriterStats.Declared(statsKey = Some(key)))).key
 
   /** Per-file ROW COUNTS for the given (relative) files, in ONE scan
     * — the batched replacement for per-file `isEmpty` probes on
@@ -1088,64 +1076,6 @@ object TxnLog {
       .collect()
       .map(r => attributeFile(table, r.getString(0), files) -> r.getLong(1))
       .toMap
-  }
-
-  /** Per-file [min, max] for EVERY column in `cols` — the manifest's
-    * multi-column bounds (`Manifest.colStats`: the Iceberg per-column
-    * manifest bounds / Delta add-file stats idea, generalized beyond
-    * the single merge `statsKey`), computed in ONE scan of exactly
-    * those files regardless of how many columns ride along. Same
-    * entry conventions as [[keyStats]]: an all-NULL column in a file
-    * gets the explicit [[EmptyRange]]; a zero-row file gets no entry
-    * (unknown, never pruned).
-    *
-    * INTEGRAL CONTRACT, enforced loudly: declared columns must exist
-    * in the files' schema and be integral (byte/short/int/long). A
-    * blind BIGINT cast of anything else is a CORRECTNESS hazard, not
-    * a degradation — a TIMESTAMP casts to epoch SECONDS while pushed
-    * Catalyst literals compare in micros, and a cast that nulls out
-    * non-NULL data would write the [[EmptyRange]] entry, pruning
-    * every file; the row-level CoW scan plans its rewrite set from
-    * these bounds, so a wrong prune silently loses rows. Refusing at
-    * stats-computation time keeps a bad declaration from ever
-    * reaching a manifest. */
-  def colStatsFor(
-      spark: SparkSession, table: Path, files: Seq[String],
-      cols: Seq[String]): Map[String, Map[String, (Long, Long)]] = {
-    import org.apache.spark.sql.functions._
-    if (files.isEmpty || cols.isEmpty) return cols.map(_ -> Map.empty[String, (Long, Long)]).toMap
-    val df = graft.util.ParquetSchema.read(spark,
-      files.map(f => table.resolve(f).toString))
-    cols.foreach { c =>
-      val field = df.schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"colStats column `$c` does not exist in the " +
-          s"table schema ${df.schema.fieldNames.mkString("[", ", ", "]")}"))
-      field.dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => ()
-        case other => sys.error(
-          s"colStats column `$c` has non-integral type " +
-            s"${other.simpleString}: manifest bounds compare as BIGINT, " +
-            "so only byte/short/int/long columns may be declared")
-      }
-    }
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c).cast("bigint")).as(s"mn_$c"),
-      max(col(c).cast("bigint")).as(s"mx_$c")))
-    val rows = df
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    cols.zipWithIndex.map { case (c, i) =>
-      c -> rows.map { r =>
-        val rel = attributeFile(table, r.getString(0), files)
-        val (mnI, mxI) = (1 + 2 * i, 2 + 2 * i)
-        if (r.isNullAt(mnI) || r.isNullAt(mxI)) rel -> EmptyRange
-        else rel -> (r.getLong(mnI), r.getLong(mxI))
-      }.toMap
-    }.toMap
   }
 
   /** KMV sketch size per (column, file): 32 sign-flipped hash values
@@ -1189,71 +1119,10 @@ object TxnLog {
     case _ => false
   }
 
-  /** Per-file KMV distinct sketches for `cols` over `files`, in ONE
-    * scan however many columns ride along (the [[colStatsFor]]
-    * discipline). Each entry is `nullCount +: sketch`: element 0 is
-    * the file's exact NULL count for the column (the CBO's
-    * count-stats contract — Spark's aggregate/join estimation only
-    * trusts a distinct count accompanied by a null count), and the
-    * tail is the k smallest distinct SIGN-FLIPPED xxhash64 values of
-    * the column, sorted ascending — flipping makes signed order equal
-    * unsigned hash order, so sketches merge by union-take-k and
-    * [[ndvEstimate]] reads the kth value as a fraction of the hash
-    * space. Works for ANY atomic column type (this is what carries
-    * STRING key cardinality, which min/max bounds cannot). NULLs are
-    * excluded from the sketch (SQL distinct-count semantics). */
-  def ndvSketchFor(
-      spark: SparkSession, table: Path, files: Seq[String],
-      cols0: Seq[String], auto: Boolean = false)
-      : Map[String, Map[String, Seq[Long]]] = {
-    import org.apache.spark.sql.functions._
-    if (files.isEmpty || (cols0.isEmpty && !(auto && ndvAuto(spark))))
-      return cols0.map(_ -> Map.empty[String, Seq[Long]]).toMap
-    val df = graft.util.ParquetSchema.read(spark,
-      files.map(f => table.resolve(f).toString))
-    cols0.foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"ndv column `$c` does not exist in the table schema " +
-          df.schema.fieldNames.mkString("[", ", ", "]"))
-    }
-    // Auto mode (write paths): sketch every join/grouping-plausible
-    // column — strings (which min/max bounds can never size for the
-    // CBO) and integrals — in ADDITION to the declared set, so a
-    // table nobody ran `declare_ndv` on still reaches the optimizer
-    // with string-key cardinality (r19 verdict task 2: opt-in
-    // declaration left every undeclared table CBO-blind). The sketch
-    // rides this same one-scan pass; marginal cost is O(k) per
-    // column per file. `spark.graft.ndv.auto=false` opts out;
-    // `declare_ndv` remains the explicit override either way.
-    val cols =
-      if (!auto || !ndvAuto(spark)) cols0
-      else (cols0 ++ df.schema.fields.collect {
-        case f if ndvAutoEligible(f.dataType) => f.name
-      }).distinct.sorted
-    if (cols.isEmpty)
-      return Map.empty[String, Map[String, Seq[Long]]]
-    val aggs = cols.flatMap(c => Seq(
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$c"),
-      graft.functions.BottomKLongs.asColumn(
-        when(col(c).isNotNull,
-          xxhash64(col(c)).bitwiseXOR(lit(Long.MinValue))),
-        NdvSketchK).as(s"kmv_$c")))
-    val rows = df
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    cols.zipWithIndex.map { case (c, i) =>
-      c -> rows.map { r =>
-        attributeFile(table, r.getString(0), files) ->
-          (r.getLong(1 + 2 * i) +: r.getSeq[Long](2 + 2 * i).toSeq)
-      }.toMap
-    }.toMap
-  }
-
   /** The three per-file stats families a commit carries for the files
     * it writes — key [min,max] bounds, declared multi-column bounds,
-    * and NDV sketches — as one value, so commit paths can compute all
-    * of them in ONE scan ([[commitStatsFor]]) instead of three. */
+    * and NDV sketches (`nullCount +: sketch` per file) — as one value,
+    * computed by [[graft.sources.WriterStats]]. */
   case class CommitStats(
       key: Map[String, (Long, Long)],
       colStats: Map[String, Map[String, (Long, Long)]],
@@ -1261,112 +1130,6 @@ object TxnLog {
 
   object CommitStats {
     val empty: CommitStats = CommitStats(Map.empty, Map.empty, Map.empty)
-  }
-
-  /** [[keyStats]] + [[colStatsFor]] + [[ndvSketchFor]] fused into ONE
-    * `groupBy(input_file_name())` pass over exactly `files` (r21
-    * optimization, guide §1.2: every commit used to launch three
-    * back-to-back jobs that each re-read the files it had just
-    * written — the scans differ only in their aggregate list, which
-    * composes). Aggregate expressions, type checks, entry conventions
-    * (EmptyRange for all-NULL, no entry for zero-row files), and the
-    * auto-NDV column expansion are the three primitives' own, applied
-    * verbatim, so every manifest this writes is byte-identical to the
-    * three-scan form (CommitStatsSpec pins that equivalence). The
-    * primitives stay public for single-family callers (declareNdv,
-    * statsFor bootstraps). */
-  def commitStatsFor(
-      spark: SparkSession, table: Path, files: Seq[String],
-      statsKey: Option[String],
-      colStatCols: Seq[String],
-      ndvCols0: Seq[String], ndvAutoMode: Boolean = true): CommitStats = {
-    import org.apache.spark.sql.functions._
-    val wantNdv =
-      ndvCols0.nonEmpty || (ndvAutoMode && ndvAuto(spark))
-    if (files.isEmpty)
-      return CommitStats(Map.empty,
-        colStatCols.map(_ -> Map.empty[String, (Long, Long)]).toMap,
-        ndvCols0.map(_ -> Map.empty[String, Seq[Long]]).toMap)
-    if (statsKey.isEmpty && colStatCols.isEmpty && !wantNdv)
-      return CommitStats.empty
-    val df = graft.util.ParquetSchema.read(spark,
-      files.map(f => table.resolve(f).toString))
-    // colStatsFor's integral contract, enforced identically: manifest
-    // bounds compare as BIGINT, so a non-integral declaration must
-    // refuse here, before it can reach a manifest.
-    colStatCols.foreach { c =>
-      val field = df.schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"colStats column `$c` does not exist in the " +
-          s"table schema ${df.schema.fieldNames.mkString("[", ", ", "]")}"))
-      field.dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => ()
-        case other => sys.error(
-          s"colStats column `$c` has non-integral type " +
-            s"${other.simpleString}: manifest bounds compare as BIGINT, " +
-            "so only byte/short/int/long columns may be declared")
-      }
-    }
-    ndvCols0.foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"ndv column `$c` does not exist in the table schema " +
-          df.schema.fieldNames.mkString("[", ", ", "]"))
-    }
-    // ndvSketchFor's auto expansion, verbatim: declared ++ every
-    // join/grouping-plausible (string/integral) schema column.
-    val ndvCols =
-      if (!ndvAutoMode || !ndvAuto(spark)) ndvCols0
-      else (ndvCols0 ++ df.schema.fields.collect {
-        case f if ndvAutoEligible(f.dataType) => f.name
-      }).distinct.sorted
-    // One aggregate list, positionally decoded: key bounds first,
-    // then per-column bounds, then per-column (nullCount, sketch).
-    val keyAggs = statsKey.toSeq.flatMap(k => Seq(
-      min(col(k)).as("k_mn"), max(col(k)).as("k_mx")))
-    val colAggs = colStatCols.flatMap(c => Seq(
-      min(col(c).cast("bigint")).as(s"mn_$c"),
-      max(col(c).cast("bigint")).as(s"mx_$c")))
-    val ndvAggs = ndvCols.flatMap(c => Seq(
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$c"),
-      graft.functions.BottomKLongs.asColumn(
-        when(col(c).isNotNull,
-          xxhash64(col(c)).bitwiseXOR(lit(Long.MinValue))),
-        NdvSketchK).as(s"kmv_$c")))
-    val aggs = keyAggs ++ colAggs ++ ndvAggs
-    if (aggs.isEmpty)
-      return CommitStats(Map.empty,
-        colStatCols.map(_ -> Map.empty[String, (Long, Long)]).toMap,
-        Map.empty)
-    val rows = df
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val withRel = rows.map(r => attributeFile(table, r.getString(0), files) -> r)
-    val keyOff = 1
-    val colOff = keyOff + keyAggs.size
-    val ndvOff = colOff + colAggs.size
-    val key = statsKey.fold(Map.empty[String, (Long, Long)]) { _ =>
-      withRel.map { case (rel, r) =>
-        if (r.isNullAt(keyOff) || r.isNullAt(keyOff + 1)) rel -> EmptyRange
-        else rel -> (r.getLong(keyOff), r.getLong(keyOff + 1))
-      }.toMap
-    }
-    val colStats = colStatCols.zipWithIndex.map { case (c, i) =>
-      c -> withRel.map { case (rel, r) =>
-        val (mnI, mxI) = (colOff + 2 * i, colOff + 2 * i + 1)
-        if (r.isNullAt(mnI) || r.isNullAt(mxI)) rel -> EmptyRange
-        else rel -> (r.getLong(mnI), r.getLong(mxI))
-      }.toMap
-    }.toMap
-    val ndv = ndvCols.zipWithIndex.map { case (c, i) =>
-      c -> withRel.map { case (rel, r) =>
-        rel -> (r.getLong(ndvOff + 2 * i) +:
-          r.getSeq[Long](ndvOff + 2 * i + 1).toSeq)
-      }.toMap
-    }.toMap
-    CommitStats(key, colStats, ndv)
   }
 
   /** Distinct-count estimate from a MERGED sketch (union of per-file
@@ -1407,7 +1170,9 @@ object TxnLog {
       cols: Seq[String]): Committed =
     commitRetryWith(table, t => t.copy(
       action = "ndv",
-      ndv = t.ndv ++ ndvSketchFor(spark, table, t.files, cols),
+      ndv = t.ndv ++ WriterStats.scan(spark, table, t.files,
+        WriterStats.footerSpec(spark, table, t.files,
+          WriterStats.Declared(ndvCols = cols))).ndv,
       txn = None, ts = 0L))
 
   /** Hive-style partition values parsed from files' RELATIVE paths
@@ -1700,17 +1465,8 @@ object TxnLog {
     // tasks ALSO fold the commit stats as they write (r22,
     // WriterStats) — zero post-write stats jobs.
     val rewrite = morRead(spark, table, t0, Some(affected)).coalesce(nOut)
-    val spec = graft.sources.WriterStats.spec(spark, rewrite.schema,
-      t0.statsKey, t0.colStats.keys.toSeq.sorted, t0.ndv.keys.toSeq.sorted)
-    val staged3 = graft.sources.StagedWrite.parquetWithStats(
-      rewrite, table, subdir, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val written = staged.map(_._1)
-    val cs = graft.sources.WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-    val newStats = cs.key
-    val newColStats = cs.colStats
-    val newNdv = cs.ndv
+    val staged = StagedWrite.parquet(
+      rewrite, table, subdir, WriterStats.Declared.of(t0))
     val affectedSet = affected.toSet
     commitRetryWith(table, t => {
       // Like a CoW merge, this rewrite does not commute: it replaced
@@ -1720,15 +1476,16 @@ object TxnLog {
         s"concurrent commit v${t.version} during materializeDeletes " +
           s"planned against v${t0.version}; retry")
       Manifest(0L, 0L, "materialize",
-        t0.files.filterNot(affectedSet) ++ written,
-        stats = (t0.stats -- affected) ++ newStats,
+        t0.files.filterNot(affectedSet) ++ staged.files,
+        stats = (t0.stats -- affected) ++ staged.stats.key,
         statsKey = t0.statsKey,
         partitions = t0.partitions -- affected,
         columns = t0.columns,
         colStats = t0.colStats.map { case (c, pf) =>
-          c -> ((pf -- affected) ++ newColStats.getOrElse(c, Map.empty))
+          c -> ((pf -- affected) ++
+            staged.stats.colStats.getOrElse(c, Map.empty))
         },
-        rows = staged.toMap, ndv = newNdv)
+        rows = staged.rows, ndv = staged.stats.ndv)
     })
   }
 
@@ -1835,17 +1592,8 @@ object TxnLog {
       // (r22, WriterStats): zero post-write stats jobs. Survivors
       // keep their entries, so every merge commit leaves a fully
       // stats-bearing tip.
-      val spec = graft.sources.WriterStats.spec(spark, out.schema,
-        Some(key), tip.colStats.keys.toSeq.sorted,
-        tip.ndv.keys.toSeq.sorted)
-      val staged3 = graft.sources.StagedWrite.parquetWithStats(
-        out, table, attemptDir, Some(spec))
-      val staged = staged3.map { case (rel, n, _) => (rel, n) }
-      val written = staged.map(_._1)
-      val cs = graft.sources.WriterStats.assemble(spec,
-        staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-      val newStats = cs.key
-      val newFiles = written
+      val staged = StagedWrite.parquet(out, table, attemptDir,
+        WriterStats.Declared.of(tip).copy(statsKey = Some(key)))
       // A COW rewrite does NOT commute the way an append does: losing
       // the race means the files this attempt read (and replaced) may
       // no longer be the tip's — blindly unioning file sets would
@@ -1854,20 +1602,19 @@ object TxnLog {
       // attempt's files (left for vacuum, like any aborted write) and
       // REPLANS the whole merge against the new tip — the
       // serializable-writer discipline, not just retry-the-rename.
-      val keptFiles = tip.files.filterNot(affected) ++ newFiles
-      val newColStats = cs.colStats
-      val newNdv = cs.ndv
+      val keptFiles = tip.files.filterNot(affected) ++ staged.files
       tryCommitManifest(table, Manifest(tipVersion + 1, tipVersion,
         "merge", keptFiles,
-        (ranges -- affected) ++ newStats,
+        (ranges -- affected) ++ staged.stats.key,
         statsKey = Some(key),
         partitions = tip.partitions -- affected,
         columns = tip.columns,
         sizes = fileSizes(table, keptFiles, tip.sizes),
         colStats = tip.colStats.map { case (c, perFile) =>
-          c -> ((perFile -- affected) ++ newColStats.getOrElse(c, Map.empty))
+          c -> ((perFile -- affected) ++
+            staged.stats.colStats.getOrElse(c, Map.empty))
         },
-        deletes = tip.deletes, rows = staged.toMap, ndv = newNdv),
+        deletes = tip.deletes, rows = staged.rows, ndv = staged.stats.ndv),
         parentHint = Some(tip)) match {
         case Some(v) => return Committed(v, conflicts)
         case None => conflicts += 1; attempt += 1
@@ -1894,14 +1641,9 @@ object TxnLog {
     // WriterStats) — zero post-write stats jobs; hoisted out of the
     // commit closure (r21), so a retry never recomputes either.
     val compacted = readVersion(spark, table, tipVersion).coalesce(nFiles)
-    val spec = graft.sources.WriterStats.spec(spark, compacted.schema,
-      effKey, tipM.colStats.keys.toSeq.sorted, tipM.ndv.keys.toSeq.sorted)
-    val staged3 = graft.sources.StagedWrite.parquetWithStats(
-      compacted, table, subdir, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val newFiles = staged.map(_._1)
-    val cs = graft.sources.WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
+    val staged = StagedWrite.parquet(compacted, table, subdir,
+      WriterStats.Declared.of(tipM).copy(statsKey = effKey))
+    val cs = staged.stats
     commitRetryWith(table, t => {
       // A full rewrite does not commute (same discipline as
       // compactSmall/materializeDeletes): a concurrent append or
@@ -1912,9 +1654,9 @@ object TxnLog {
       require(t.version == tipVersion,
         s"concurrent commit v${t.version} during compact planned " +
           s"against v$tipVersion; retry")
-      Manifest(0L, 0L, "compact", newFiles,
+      Manifest(0L, 0L, "compact", staged.files,
         cs.key, effKey, columns = t.columns, colStats = cs.colStats,
-        rows = staged.toMap, ndv = cs.ndv)
+        rows = staged.rows, ndv = cs.ndv)
     })
   }
 
@@ -2497,14 +2239,9 @@ object TxnLog {
     // hoisted out of the commit closure (r21) so retries recompute
     // nothing.
     val packed = morRead(spark, table, t0, Some(small)).coalesce(nOut)
-    val spec = graft.sources.WriterStats.spec(spark, packed.schema,
-      t0.statsKey, t0.colStats.keys.toSeq.sorted, t0.ndv.keys.toSeq.sorted)
-    val staged3 = graft.sources.StagedWrite.parquetWithStats(
-      packed, table, subdir, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val written = staged.map(_._1)
-    val cs = graft.sources.WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
+    val staged = StagedWrite.parquet(
+      packed, table, subdir, WriterStats.Declared.of(t0))
+    val cs = staged.stats
     val smallSet = small.toSet
     commitRetryWith(table, t => {
       // A pack rewrite does not commute (same discipline as
@@ -2514,7 +2251,7 @@ object TxnLog {
         s"concurrent commit v${t.version} during compactSmall " +
           s"planned against v${t0.version}; retry")
       Manifest(0L, 0L, "optimize",
-        t0.files.filterNot(smallSet) ++ written,
+        t0.files.filterNot(smallSet) ++ staged.files,
         stats = (t0.stats -- small) ++ cs.key,
         statsKey = t0.statsKey,
         partitions = t0.partitions -- small,
@@ -2522,7 +2259,7 @@ object TxnLog {
         colStats = t0.colStats.map { case (c, pf) =>
           c -> ((pf -- small) ++ cs.colStats.getOrElse(c, Map.empty))
         },
-        deletes = t0.deletes, rows = staged.toMap,
+        deletes = t0.deletes, rows = staged.rows,
         ndv = cs.ndv)
     })
   }

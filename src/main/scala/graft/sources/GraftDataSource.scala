@@ -402,30 +402,16 @@ object GraftTables {
     val physical = data.select(cols.toSeq.map(c =>
       col(c).cast(snap.schema(c).dataType).as(snap.physicalOf(c))): _*)
     val spark = data.sparkSession
-    // Writer-side stats (r22): the write tasks fold the commit stats
-    // over the rows as they stage them, under the SNAPSHOT's declared
-    // column sets — zero post-write stats jobs on the common path.
-    val snapSets = (snap.manifest.statsKey,
-      snap.manifest.colStats.keys.toSeq.sorted,
-      snap.manifest.ndv.keys.toSeq.sorted)
-    val spec = WriterStats.spec(spark, physical.schema,
-      snapSets._1, snapSets._2, snapSets._3)
-    val staged3 = stage(snap.root, physical, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val newFiles = staged.map(_._1)
-    val newRows = staged.toMap
-    // The staged files never change across commit retries — their
-    // stats are computed once, by the write tasks themselves. The
-    // cache is keyed by the declared column sets of the manifest the
-    // commit attempt targets, pre-seeded with the writer-side result
-    // under the snapshot's sets; a rebase onto a tip whose sets
-    // CHANGED falls back to the fused read-back scan (r21,
-    // TxnLog.commitStatsFor) under the new sets.
-    val statsCache = scala.collection.mutable.Map
-      .empty[(Option[String], Seq[String], Seq[String]),
-        TxnLog.CommitStats]
-    statsCache.put(snapSets, WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) }))
+    // The write tasks fold the commit stats over the rows as they
+    // stage them, under the SNAPSHOT's declaration — zero post-write
+    // stats jobs. The staged files never change across commit
+    // retries; a rebase onto a tip that declares different sets
+    // re-scans them under the tip's sets (WriterStats.Memo).
+    val snapDecl = WriterStats.Declared.of(snap.manifest)
+    val staged = stage(snap.root, physical, snapDecl)
+    val newFiles = staged.files
+    val stats = new WriterStats.Memo(spark, snap.root, newFiles,
+      physical.schema, snapDecl, staged.stats)
     TxnLog.commitRetryWith(snap.root, tip => {
       // Idempotent-replay guard, INSIDE the attempt: if this writer's
       // (appId, batchId) already sits at or below a committed stamp —
@@ -443,13 +429,7 @@ object GraftTables {
       // pass, only in that rare window) so no unvalidated rows land.
       if (tip.constraints != snap.manifest.constraints)
         TxnLog.checkConstraints(data, tip.constraints)
-      // Key bounds + declared column bounds + NDV sketches for the new
-      // files, in ONE scan (TxnLog.commitStatsFor).
-      val cs = statsCache.getOrElseUpdate(
-        (tip.statsKey, tip.colStats.keys.toSeq.sorted,
-          tip.ndv.keys.toSeq.sorted),
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, tip.statsKey,
-          tip.colStats.keys.toSeq.sorted, tip.ndv.keys.toSeq.sorted))
+      val cs = stats(tip)
       val newStats = cs.key
       val newColStats = cs.colStats
       val mergedColStats = tip.colStats.map { case (c, perFile) =>
@@ -469,7 +449,7 @@ object GraftTables {
       if (overwrite)
         TxnLog.Manifest(0L, 0L, "replace", newFiles, newStats,
           tip.statsKey, columns = cols, txn = txn,
-          colStats = newColStats, rows = newRows, ndv = newNdv)
+          colStats = newColStats, rows = staged.rows, ndv = newNdv)
       else
         TxnLog.Manifest(0L, 0L, "append", tip.files ++ newFiles,
           tip.stats ++ newStats, tip.statsKey,
@@ -477,7 +457,7 @@ object GraftTables {
           colStats = mergedColStats,
           // Pending merge-on-read deletes ride along; the appended
           // files' fresh seq keeps them out of the deletes' scope.
-          deletes = tip.deletes, rows = newRows, ndv = newNdv)
+          deletes = tip.deletes, rows = staged.rows, ndv = newNdv)
     })
   }
 
@@ -502,14 +482,10 @@ object GraftTables {
     // estimate requires every kept file to carry an entry). Sketched
     // by the write tasks themselves (r22, WriterStats) — zero
     // post-write stats jobs.
-    val spec = WriterStats.spec(data.sparkSession, data.schema,
-      None, Seq.empty, Seq.empty)
-    val staged3 = stage(root, data, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val newFiles = staged.map(_._1)
-    val newRows = staged.toMap
-    val newNdv = WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) }).ndv
+    val staged = stage(root, data, WriterStats.Declared())
+    val newFiles = staged.files
+    val newRows = staged.rows
+    val newNdv = staged.stats.ndv
     val cols = data.schema.fields.zipWithIndex.map { case (f, i) =>
       TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString, f.name)
     }.toSeq
@@ -542,11 +518,10 @@ object GraftTables {
     * counts and stats with zero driver footer reads and zero
     * post-write stats jobs. */
   private def stage(root: Path, physical: DataFrame,
-      spec: Option[WriterStats.Spec] = None)
-      : Seq[(String, Long, Option[WriterStats.FileStats])] = {
+      declared: WriterStats.Declared): StagedWrite.Staged = {
     val subdir = s"w${System.currentTimeMillis()}-" +
       s"${stagingCounter.incrementAndGet()}"
-    StagedWrite.parquetWithStats(physical, root, subdir, spec)
+    StagedWrite.parquet(physical, root, subdir, declared)
   }
 
   /** `DELETE FROM graft.`path` WHERE pred` as a copy-on-write log
@@ -691,14 +666,10 @@ object GraftTables {
       // partitions, so no count re-scan and no empty-file filter —
       // and fold the rewritten files' stats as they write (r22,
       // WriterStats): zero post-write stats jobs.
-      val spec = WriterStats.spec(spark, out.schema, tip.statsKey,
-        tip.colStats.keys.toSeq.sorted, tip.ndv.keys.toSeq.sorted)
-      val staged3 = StagedWrite.parquetWithStats(
-        out, root, attemptDir, Some(spec))
-      val staged = staged3.map { case (rel, n, _) => (rel, n) }
-      val newFiles = staged.map(_._1)
-      val cs = WriterStats.assemble(spec,
-        staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
+      val staged = StagedWrite.parquet(
+        out, root, attemptDir, WriterStats.Declared.of(tip))
+      val newFiles = staged.files
+      val cs = staged.stats
       val newStats = cs.key
       val newColStats = cs.colStats
       val newNdv = cs.ndv
@@ -719,7 +690,7 @@ object GraftTables {
         colStats = tip.colStats.map { case (c, perFile) =>
           c -> ((perFile -- affected) ++ newColStats.getOrElse(c, Map.empty))
         },
-        deletes = tip.deletes, rows = staged.toMap, ndv = newNdv),
+        deletes = tip.deletes, rows = staged.rows, ndv = newNdv),
         parentHint = Some(tip)) match {
         case Some(_) => return
         case None => attempt += 1 // lost the race: replan on the new tip
@@ -859,14 +830,10 @@ object GraftTables {
         set.get(c).map(expr).getOrElse(col(c))
           .cast(snap.schema(c).dataType).as(snap.physicalOf(c))
       }: _*)
-      val spec = WriterStats.spec(spark, rewritten.schema, t0.statsKey,
-        t0.colStats.keys.toSeq.sorted, t0.ndv.keys.toSeq.sorted)
-      val staged3 = StagedWrite.parquetWithStats(
-        rewritten, root, dataSub, Some(spec))
-      val staged = staged3.map { case (rel, n, _) => (rel, n) }
-      val newFiles = staged.map(_._1)
-      val cs = WriterStats.assemble(spec,
-        staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
+      val staged = StagedWrite.parquet(
+        rewritten, root, dataSub, WriterStats.Declared.of(t0))
+      val newFiles = staged.files
+      val cs = staged.stats
       val newStats = cs.key
       val newColStats = cs.colStats
       val newNdv = cs.ndv
@@ -879,7 +846,7 @@ object GraftTables {
             s"against v${t0.version}; retry")
         t.copy(action = "update-mor",
           files = t.files ++ newFiles,
-          rows = t.rows ++ staged.toMap,
+          rows = t.rows ++ staged.rows,
           ndv = t.ndv.map { case (c, pf) =>
             c -> (pf ++ newNdv.getOrElse(c, Map.empty))
           },

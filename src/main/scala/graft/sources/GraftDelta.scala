@@ -118,14 +118,12 @@ final class GraftDeltaBatchWrite(
       Some(writerSpec))
   }
 
-  // Writer-side stats under the SNAPSHOT's declared column sets
-  // (r22): the delta write's data files get their key/column bounds +
-  // NDV sketches folded by the write tasks themselves, so the common
-  // (no-rebase) commit runs zero post-write stats jobs; a rebase onto
-  // a tip whose sets changed falls back to the fused read-back scan.
+  // Writer-side stats under the SNAPSHOT's declared column sets: the
+  // delta write's data files get their key/column bounds + NDV
+  // sketches folded by the write tasks themselves, so the common
+  // (no-rebase) commit runs zero post-write stats jobs.
   private val writerSpec = WriterStats.spec(spark, snap.physicalSchema,
-    snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-    snap.manifest.ndv.keys.toSeq.sorted)
+    WriterStats.Declared.of(snap.manifest))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val outs = messages.map(_.asInstanceOf[GraftDeltaFiles])
@@ -147,18 +145,11 @@ final class GraftDeltaBatchWrite(
     // against, not the snapshot we read: a lost race can rebase onto
     // a tip whose statsKey / colStats column set changed, and bounds
     // recorded under the wrong column would silently mis-prune later
-    // scans. Memoized per key set — recomputed only when a rebase
-    // actually changed it (the append path's statsCache discipline).
-    val statsCache = scala.collection.mutable.Map
-      .empty[(Option[String], Seq[String], Seq[String]),
-        TxnLog.CommitStats]
-    // Pre-seed with the WRITER-SIDE stats the tasks folded while
-    // writing (r22) under the snapshot's declared sets — the common
-    // path commits with zero post-write stats jobs; only a rebase
-    // onto changed sets re-scans.
-    statsCache.put(
-      (snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-        snap.manifest.ndv.keys.toSeq.sorted),
+    // scans. The memo is seeded with the stats the write tasks folded
+    // under the snapshot's sets, so only a rebase onto changed sets
+    // re-scans.
+    val stats = new WriterStats.Memo(spark, snap.root, newFiles,
+      snap.physicalSchema, writerSpec.declared,
       WriterStats.assemble(writerSpec,
         outs.toSeq.flatMap(o => o.dataRel
           .filter(_ => o.dataRows > 0)
@@ -185,15 +176,7 @@ final class GraftDeltaBatchWrite(
         validate(base.constraints)
         checkedUnder = base.constraints
       }
-      // Key bounds + column bounds + NDV sketches in ONE fused scan
-      // (TxnLog.commitStatsFor, r21) — and the NDV leg now rides the
-      // retry cache too (it used to recompute on every rebase attempt
-      // even when the declaration set was unchanged).
-      val cs = statsCache.getOrElseUpdate(
-        (base.statsKey, base.colStats.keys.toSeq.sorted,
-          base.ndv.keys.toSeq.sorted),
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, base.statsKey,
-          base.colStats.keys.toSeq.sorted, base.ndv.keys.toSeq.sorted))
+      val cs = stats(base)
       val newStats = cs.key
       val newColStats = cs.colStats
       val newNdv = cs.ndv

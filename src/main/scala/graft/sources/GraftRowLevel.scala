@@ -186,14 +186,11 @@ final class GraftReplaceDataWrite(
   private val staging = s"rl${System.currentTimeMillis()}-" +
     java.util.UUID.randomUUID().toString.take(8)
 
-  // Writer-side stats under the SNAPSHOT's declared column sets
-  // (r22): the write tasks fold key/column bounds + NDV sketches as
-  // they write, so the common (no-rebase) commit runs zero post-write
-  // stats jobs; a rebase onto a tip whose sets changed falls back to
-  // the fused read-back scan.
+  // Writer-side stats under the SNAPSHOT's declared column sets: the
+  // write tasks fold key/column bounds + NDV sketches as they write,
+  // so the common (no-rebase) commit runs zero post-write stats jobs.
   private val writerSpec = WriterStats.spec(spark, snap.physicalSchema,
-    snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-    snap.manifest.ndv.keys.toSeq.sorted)
+    WriterStats.Declared.of(snap.manifest))
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
@@ -240,18 +237,13 @@ final class GraftReplaceDataWrite(
     // against, not the snapshot we read: a lost race can rebase onto
     // a tip whose statsKey / colStats column set changed, and bounds
     // recorded under the wrong column would silently mis-prune later
-    // scans. Memoized per key set — recomputed only when a rebase
-    // actually changed it (the append path's statsCache discipline).
-    val statsCache = scala.collection.mutable.Map
-      .empty[(Option[String], Seq[String], Seq[String]),
-        TxnLog.CommitStats]
-    // Pre-seed with the WRITER-SIDE stats the tasks folded while
-    // writing (r22) under the snapshot's declared sets — the common
-    // path commits with zero post-write stats jobs; only a rebase
-    // onto changed sets re-scans.
-    statsCache.put(
-      (snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-        snap.manifest.ndv.keys.toSeq.sorted),
+    // scans. The memo is seeded with the stats the write tasks folded
+    // under the snapshot's sets, so only a rebase onto changed sets
+    // re-scans. Without the NDV leg, every SQL UPDATE/MERGE/DELETE
+    // would break the full-coverage requirement and blind the CBO's
+    // string-key NDV until the next compaction.
+    val stats = new WriterStats.Memo(spark, snap.root, newFiles,
+      snap.physicalSchema, writerSpec.declared,
       WriterStats.assemble(writerSpec,
         written.filter(_.rows > 0).toSeq
           .flatMap(w => w.stats.map(w.relPath -> _))))
@@ -284,18 +276,7 @@ final class GraftReplaceDataWrite(
         validateConstraints(base.constraints, newFiles)
         checkedUnder = base.constraints
       }
-      // Key bounds + column bounds + NDV sketches for the staged
-      // files in ONE fused scan (TxnLog.commitStatsFor, r21) — a
-      // rebase onto a tip whose declaration sets changed recomputes
-      // under the new sets; same-set retries hit the cache. Without
-      // the NDV leg, every SQL UPDATE/MERGE/DELETE would break the
-      // full-coverage requirement and blind the CBO's string-key NDV
-      // until the next compaction.
-      val cs = statsCache.getOrElseUpdate(
-        (base.statsKey, base.colStats.keys.toSeq.sorted,
-          base.ndv.keys.toSeq.sorted),
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, base.statsKey,
-          base.colStats.keys.toSeq.sorted, base.ndv.keys.toSeq.sorted))
+      val cs = stats(base)
       val newStats = cs.key
       val newColStats = cs.colStats
       val newNdv = cs.ndv

@@ -30,26 +30,24 @@ import org.apache.spark.util.SerializableConfiguration
   * filter. */
 object StagedWrite {
 
-  /** Write `physical` under `root/subdir`, one parquet per non-empty
-    * partition, and return table-relative (file, rowCount) pairs as
-    * reported by the write tasks themselves. */
-  def parquetWithCounts(physical: DataFrame, root: Path,
-      subdir: String): Seq[(String, Long)] =
-    parquetWithStats(physical, root, subdir, None)
-      .map { case (rel, n, _) => (rel, n) }
+  /** What a staging write hands its commit: the written files
+    * (table-relative, sorted), their row counts, and their stats under
+    * the declaration the write ran with — all reported by the write
+    * tasks themselves. */
+  final case class Staged(
+      files: Seq[String], rows: Map[String, Long],
+      stats: graft.operators.TxnLog.CommitStats)
 
-  /** [[parquetWithCounts]] PLUS writer-side per-file commit stats
-    * (r22): each task folds `spec`'s key bounds / column bounds / NDV
-    * sketches over the rows as it writes them ([[WriterStats
-    * .Collector]]) and ships the result back alongside its (file,
-    * rows) pair — so the commit needs ZERO post-write stats jobs over
-    * the staged bytes. `spec = None` collects nothing (the plain
-    * count contract). */
-  def parquetWithStats(physical: DataFrame, root: Path,
-      subdir: String, spec: Option[WriterStats.Spec])
-      : Seq[(String, Long, Option[WriterStats.FileStats])] = {
+  /** Write `physical` under `root/subdir`, one parquet per non-empty
+    * partition. Each task folds the `declared` commit stats over the
+    * rows as it writes them ([[WriterStats.Collector]]) and ships
+    * them back alongside its (file, rows) pair — so the commit needs
+    * ZERO post-write stats jobs over the staged bytes. */
+  def parquet(physical: DataFrame, root: Path, subdir: String,
+      declared: WriterStats.Declared): Staged = {
     val spark = physical.sparkSession
     val schema = physical.schema
+    val spec = WriterStats.spec(spark, schema, declared)
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val owf = ParquetUtils.prepareWrite(spark.sessionState.conf, job,
       schema,
@@ -57,10 +55,11 @@ object StagedWrite {
     val conf = new SerializableConfiguration(job.getConfiguration)
     Files.createDirectories(root.resolve(subdir))
     val rootUri = root.toUri.toString
-    // An empty spec collects nothing per row — drop it so the row
-    // loop stays the bare write.
-    val statsSpec = spec.filterNot(_.isEmpty)
-    physical.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+    // An empty spec collects nothing per row — the row loop stays the
+    // bare write.
+    val collect = !spec.isEmpty
+    val rdd = physical.queryExecution.toRdd
+    val written = rdd.mapPartitionsWithIndex { (pid, rows) =>
       if (!rows.hasNext) Iterator.empty
       else {
         val attempt = TaskContext.get().taskAttemptId()
@@ -69,7 +68,7 @@ object StagedWrite {
         val rel = s"$subdir/part-$pid-a$attempt" +
           owf.getFileExtension(ctx)
         val out = owf.newInstance(s"$rootUri/$rel", schema, ctx)
-        val collector = statsSpec.map(new WriterStats.Collector(_))
+        val collector = Option.when(collect)(new WriterStats.Collector(spec))
         var n = 0L
         try rows.foreach { r =>
           out.write(r)
@@ -80,5 +79,8 @@ object StagedWrite {
         Iterator.single((rel, n, collector.map(_.result())))
       }
     }.collect().toSeq.sortBy(_._1)
+    Staged(written.map(_._1), written.map(w => w._1 -> w._2).toMap,
+      WriterStats.assemble(spec,
+        written.flatMap { case (rel, _, fs) => fs.map(rel -> _) }))
   }
 }

@@ -1,117 +1,149 @@
 package graft.sources
 
+import java.nio.file.Path
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.functions.{col, input_file_name}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.TxnLog
 
-/** WRITER-SIDE commit stats (r22, guide §1.2 "remove passes" / §5):
-  * every lakehouse commit used to RE-READ the files it had just
-  * written to compute their per-file stats — r21 fused the three
-  * stats jobs into one ([[TxnLog.commitStatsFor]]), but one full scan
-  * of the staged bytes per commit remained. The information exists in
-  * the write tasks themselves (they see every row as they write it),
-  * which is where Delta (`AddFile.stats`) and Iceberg
-  * (`DataFile` value bounds/null counts) collect it. This extends
-  * [[StagedWrite]]'s row-count discipline to the full stats families:
-  * the write task folds key [min,max], declared column bounds and
-  * per-column (nullCount, KMV sketch) as it writes, and ships them
-  * back in its task result / commit message — ZERO post-write stats
-  * jobs, which at a 100 TB commit means the staged bytes cross the
-  * storage layer once instead of twice.
+/** THE per-file commit stats implementation: key [min,max], declared
+  * column bounds, and per-column (nullCount, KMV sketch). Every stats
+  * entry a manifest carries is folded by [[Collector]], row by row —
+  * the place Delta (`AddFile.stats`) and Iceberg (`DataFile` value
+  * bounds/null counts) collect them too:
   *
-  * Every convention is [[TxnLog.commitStatsFor]]'s, applied verbatim
-  * so manifests stay byte-identical (CommitStatsSpec pins writer-side
-  * == read-back): the EmptyRange entry for an all-NULL column, no
-  * entry for zero-row files (empty partitions write no file), the
-  * integral-type refusal for declared bound columns, the auto-NDV
-  * expansion over string/integral schema columns, sign-flipped
-  * xxhash64 bottom-k sketches (via Spark's own [[XxHash64Function]],
-  * seed 42 — the `xxhash64()` SQL function's exact hash). The
-  * read-back pass survives as the FALLBACK for commits whose
-  * declaration sets changed under them (a rebase onto a tip that
-  * declared new columns mid-flight) and for bootstrap paths that
-  * compute stats over pre-existing files. */
+  *  - WRITE side: each staging task ([[StagedWrite]], the DSv2 writer
+  *    factories) updates a collector with every row as it writes it
+  *    and ships the result back in its task result / commit message,
+  *    so a commit runs ZERO post-write stats jobs.
+  *  - READ-BACK side ([[scan]]): files no write task described (key
+  *    bootstraps, `declare_ndv`, a rebase onto a tip that declared new
+  *    columns mid-flight) are read once and their rows folded through
+  *    the same collector inside the scan tasks.
+  *
+  * One fold means one set of conventions: the EmptyRange entry for an
+  * all-NULL column, no entry for zero-row files, the integral-type
+  * refusal for bound columns, the auto-NDV expansion over
+  * string/integral schema columns, and sign-flipped xxhash64 bottom-k
+  * sketches (Spark's own [[XxHash64Function]], seed 42 — the
+  * `xxhash64()` SQL function's exact hash). */
 object WriterStats {
 
+  /** The stats a manifest DECLARES — key column, bound columns, NDV
+    * columns — which every commit computes for the files it adds. */
+  final case class Declared(
+      statsKey: Option[String] = None,
+      colStatCols: Seq[String] = Seq.empty,
+      ndvCols: Seq[String] = Seq.empty)
+
+  object Declared {
+    def of(m: TxnLog.Manifest): Declared = Declared(m.statsKey,
+      m.colStats.keys.toSeq.sorted, m.ndv.keys.toSeq.sorted)
+  }
+
   /** The per-column stats plan, resolved and VALIDATED on the driver
-    * against the written schema before any task runs — serializable,
-    * shipped inside the write closure / writer factory.
-    *
-    * `ndvCols0` (the declared set) is kept alongside the expanded
-    * `ndvCols` because [[TxnLog.commitStatsFor]]'s zero-file arm
-    * shapes its result by the DECLARED set; [[assemble]] mirrors
-    * that. */
+    * against the file schema before any task runs — serializable,
+    * shipped inside the write closure / writer factory / scan.
+    * `ndvCols` is the declared NDV set after auto-expansion; the
+    * zero-file result ([[assemble]]) is shaped by the declared set. */
   final case class Spec(
-      schema: StructType,
-      statsKey: Option[String],
-      colStatCols: Seq[String],
-      ndvCols0: Seq[String],
-      ndvCols: Seq[String]) {
-    /** Nothing to collect: mirrors commitStatsFor's no-scan arm. */
+      schema: StructType, declared: Declared, ndvCols: Seq[String]) {
+    def statsKey: Option[String] = declared.statsKey
+    def colStatCols: Seq[String] = declared.colStatCols
     def isEmpty: Boolean =
       statsKey.isEmpty && colStatCols.isEmpty && ndvCols.isEmpty
   }
 
-  /** Build the spec — the driver-side half of commitStatsFor: the
-    * same existence checks, the same integral contract for declared
-    * bound columns (a non-integral declaration must refuse HERE,
-    * before it can reach a manifest), the same auto-NDV expansion
-    * (declared ++ every string/integral schema column, distinct,
-    * sorted) gated on the same conf. */
+  /** Build the spec: existence checks, the integral contract for the
+    * key and bound columns, and the auto-NDV expansion (declared ++
+    * every string/integral schema column, distinct, sorted) gated on
+    * `spark.graft.ndv.auto`.
+    *
+    * INTEGRAL CONTRACT, enforced loudly: manifest bounds compare as
+    * BIGINT, and a blind BIGINT cast of anything else is a
+    * CORRECTNESS hazard — a TIMESTAMP casts to epoch SECONDS while
+    * pushed Catalyst literals compare in micros, and a cast that
+    * nulls out non-NULL data would write the EmptyRange entry,
+    * pruning every file; the row-level CoW scan plans its rewrite set
+    * from these bounds, so a wrong prune silently loses rows.
+    * Refusing HERE keeps a bad declaration from reaching a manifest. */
   def spec(
-      spark: SparkSession, schema: StructType,
-      statsKey: Option[String],
-      colStatCols: Seq[String],
-      ndvCols0: Seq[String], ndvAutoMode: Boolean = true): Spec = {
-    colStatCols.foreach { c =>
+      spark: SparkSession, schema: StructType, declared: Declared,
+      ndvAutoMode: Boolean = true): Spec = {
+    def integral(what: String, c: String): Unit = {
       val field = schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"colStats column `$c` does not exist in the " +
-          s"table schema ${schema.fieldNames.mkString("[", ", ", "]")}"))
+        sys.error(s"$what `$c` does not exist in the table schema " +
+          schema.fieldNames.mkString("[", ", ", "]")))
       field.dataType match {
         case ByteType | ShortType | IntegerType | LongType => ()
         case other => sys.error(
-          s"colStats column `$c` has non-integral type " +
-            s"${other.simpleString}: manifest bounds compare as BIGINT, " +
-            "so only byte/short/int/long columns may be declared")
+          s"$what `$c` has non-integral type ${other.simpleString}: " +
+            "manifest bounds compare as BIGINT, so only byte/short/" +
+            "int/long columns may be declared")
       }
     }
-    ndvCols0.foreach { c =>
+    declared.statsKey.foreach(integral("stats key", _))
+    declared.colStatCols.foreach(integral("colStats column", _))
+    declared.ndvCols.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"ndv column `$c` does not exist in the table schema " +
           schema.fieldNames.mkString("[", ", ", "]"))
     }
-    statsKey.foreach { k =>
-      require(schema.fieldNames.contains(k),
-        s"stats key `$k` does not exist in the table schema " +
-          schema.fieldNames.mkString("[", ", ", "]"))
-    }
     val ndvCols =
-      if (!ndvAutoMode || !TxnLog.ndvAuto(spark)) ndvCols0
-      else (ndvCols0 ++ schema.fields.collect {
+      if (!ndvAutoMode || !TxnLog.ndvAuto(spark)) declared.ndvCols
+      else (declared.ndvCols ++ schema.fields.collect {
         case f if TxnLog.ndvAutoEligible(f.dataType) => f.name
       }).distinct.sorted
-    Spec(schema, statsKey, colStatCols, ndvCols0, ndvCols)
+    Spec(schema, declared, ndvCols)
   }
 
-  /** One written file's folded stats. `key`/`colBounds` use the
-    * manifest's [[TxnLog.EmptyRange]] for an all-NULL column; sketch
-    * arrays are the ≤k smallest distinct sign-flipped hashes, sorted
-    * ascending (TreeSet order) — exactly [[graft.functions
-    * .BottomKLongs]]'s eval order. Plain arrays/tuples so the value
-    * rides a task result or DSv2 commit message unmodified. */
+  /** A spec for files no write task described, resolved against their
+    * own schema (the first footer), auto-NDV off: the declared sets
+    * exactly. No files, no footer — and nothing to validate. */
+  def footerSpec(spark: SparkSession, table: Path, files: Seq[String],
+      declared: Declared): Spec =
+    if (files.isEmpty) Spec(new StructType(), declared, declared.ndvCols)
+    else spec(spark, graft.util.ParquetSchema.read(spark,
+      files.map(f => table.resolve(f).toString)).schema, declared,
+      ndvAutoMode = false)
+
+  /** One file's folded stats. `key`/`colBounds` use the manifest's
+    * [[TxnLog.EmptyRange]] for an all-NULL column; sketch arrays are
+    * the ≤k smallest distinct sign-flipped hashes, sorted ascending.
+    * Plain arrays/tuples so the value rides a task result or DSv2
+    * commit message unmodified. */
   final case class FileStats(
       key: Option[(Long, Long)],
       colBounds: Array[(Long, Long)],
       ndvNulls: Array[Long],
-      ndvSketches: Array[Array[Long]])
+      ndvSketches: Array[Array[Long]]) {
 
-  /** Per-task, per-file stats folder. NOT thread-safe (one per write
-    * task, the task updates it inline with each row it writes). */
+    /** The stats of the union of two row sets of the SAME file (a
+      * file split across read partitions): widest bounds (EmptyRange
+      * is the identity), summed null counts, sketch union → k
+      * smallest. */
+    def merge(o: FileStats): FileStats = {
+      def span(a: (Long, Long), b: (Long, Long)) =
+        (math.min(a._1, b._1), math.max(a._2, b._2))
+      FileStats(
+        key.map(span(_, o.key.get)),
+        colBounds.zip(o.colBounds).map { case (a, b) => span(a, b) },
+        ndvNulls.zip(o.ndvNulls).map { case (a, b) => a + b },
+        ndvSketches.zip(o.ndvSketches).map { case (a, b) =>
+          (a ++ b).distinct.sorted.take(TxnLog.NdvSketchK)
+        })
+    }
+  }
+
+  /** Per-file stats folder. NOT thread-safe (one per write task, or
+    * per file of a scan task; updated inline with each row). */
   final class Collector(spec: Spec) {
     private val k = TxnLog.NdvSketchK
 
@@ -178,14 +210,14 @@ object WriterStats {
         if (row.isNullAt(ord)) nulls(i) += 1
         else {
           // Spark's own xxhash64 (seed 42) over the INTERNAL value —
-          // bit-identical to `xxhash64(col)` in the read-back scan —
+          // bit-identical to the `xxhash64(col)` SQL function —
           // sign-flipped so signed order equals unsigned hash order.
           val h = XxHash64Function.hash(row.get(ord, dt), dt, 42L) ^
             Long.MinValue
           val s = sketches(i)
-          // Bottom-k distinct insert (BottomKLongs.add semantics; the
-          // size-k early reject skips values provably not in the
-          // bottom k — identical result, no churn).
+          // Bottom-k distinct insert (the size-k early reject skips
+          // values provably not in the bottom k — identical result,
+          // no churn).
           if (s.size < k) s += h
           else if (h < s.last) {
             s += h
@@ -203,18 +235,17 @@ object WriterStats {
       sketches.map(_.toArray))
   }
 
-  /** Assemble per-file writer results into the [[TxnLog.CommitStats]]
-    * commitStatsFor would have produced over the same files — same
-    * zero-file shapes (declared-set-keyed empty maps), same map
-    * keying (expanded NDV set), no entry for files absent from
-    * `perFile` (zero-row outputs write no file). */
+  /** Assemble per-file results into the manifest-shaped
+    * [[TxnLog.CommitStats]]: zero files give declared-set-keyed empty
+    * maps, NDV maps are keyed by the expanded set, and files absent
+    * from `perFile` (zero-row files) get no entry. */
   def assemble(
       spec: Spec,
       perFile: Seq[(String, FileStats)]): TxnLog.CommitStats = {
     if (perFile.isEmpty)
       return TxnLog.CommitStats(Map.empty,
         spec.colStatCols.map(_ -> Map.empty[String, (Long, Long)]).toMap,
-        spec.ndvCols0.map(_ -> Map.empty[String, Seq[Long]]).toMap)
+        spec.declared.ndvCols.map(_ -> Map.empty[String, Seq[Long]]).toMap)
     if (spec.isEmpty) return TxnLog.CommitStats.empty
     val key = spec.statsKey.fold(Map.empty[String, (Long, Long)]) { _ =>
       perFile.map { case (rel, fs) => rel -> fs.key.get }.toMap
@@ -228,5 +259,55 @@ object WriterStats {
       }.toMap
     }.toMap
     TxnLog.CommitStats(key, colStats, ndv)
+  }
+
+  /** Read-back stats of existing (table-relative) `files`: ONE job,
+    * no shuffle. The scan projects only the spec's columns plus
+    * `input_file_name()` and folds each task's rows through one
+    * [[Collector]] per file it meets; the driver merges the per-task
+    * results per file ([[FileStats.merge]]), because a file can span
+    * several read partitions and a partition can hold several files. */
+  def scan(spark: SparkSession, table: Path, files: Seq[String],
+      spec: Spec): TxnLog.CommitStats = {
+    if (files.isEmpty || spec.isEmpty) return assemble(spec, Seq.empty)
+    val cols = (spec.statsKey.toSeq ++ spec.colStatCols ++ spec.ndvCols)
+      .distinct
+    val rows = spark.read.schema(spec.schema)
+      .parquet(files.map(f => table.resolve(f).toString): _*)
+      .select(cols.map(col) :+ input_file_name(): _*)
+    val local = spec.copy(schema = StructType(cols.map(spec.schema(_))))
+    val fileOrd = cols.length
+    val perTask = rows.queryExecution.toRdd.mapPartitions { it =>
+      val byFile = mutable.HashMap.empty[String, Collector]
+      var curName: UTF8String = null
+      var cur: Collector = null
+      it.foreach { r =>
+        val name = r.getUTF8String(fileOrd)
+        if (cur == null || name != curName) {
+          curName = name.clone()
+          cur = byFile.getOrElseUpdate(curName.toString, new Collector(local))
+        }
+        cur.update(r)
+      }
+      byFile.iterator.map { case (f, c) => f -> c.result() }
+    }.collect()
+    assemble(spec, perTask.toSeq.groupMapReduce(_._1)(_._2)(_ merge _)
+      .toSeq.map { case (uri, fs) =>
+        TxnLog.attributeFile(table, uri, files) -> fs
+      })
+  }
+
+  /** A commit's stats across rebase attempts: seeded with the
+    * write tasks' result under the declaration the write ran with;
+    * an attempt against a manifest that declares DIFFERENT sets
+    * re-[[scan]]s the staged files under those (once per set). */
+  final class Memo(spark: SparkSession, table: Path, files: Seq[String],
+      schema: StructType, seeded: Declared, seed: TxnLog.CommitStats) {
+    private val bySets = mutable.Map(seeded -> seed)
+    def apply(m: TxnLog.Manifest): TxnLog.CommitStats = {
+      val d = Declared.of(m)
+      bySets.getOrElseUpdate(d,
+        scan(spark, table, files, spec(spark, schema, d)))
+    }
   }
 }

@@ -71,14 +71,6 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
           "parameter (runAvailableNow scaladoc states the derivation)"),
       ("RecallSweep.scala", "shuffle.partitions=8") ->
         "diagnostic main (ANN recall sweep), not a driver query path",
-      ("PlansR21.scala", "shuffle.partitions=8") ->
-        ("r21 optimization-evidence main (plans/r21 captures): fixed " +
-          "width keeps the committed plan files host-independent; " +
-          "never a query path"),
-      ("PlansR22.scala", "shuffle.partitions=8") ->
-        ("r22 optimization-evidence main (plans/r22 captures): fixed " +
-          "width keeps the committed plan/trace files " +
-          "host-independent; never a query path"),
       ("StreamProfile.scala", "conf.set(spark.sql.shuffle.partitions)") ->
         ("r21 measurement main: A/Bs the state-store partition count " +
           "behind the streaming lifecycle floor (set/restore scoped " +

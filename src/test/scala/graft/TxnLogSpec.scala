@@ -236,7 +236,7 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     assert(TxnLog.lastTxn(t, "never-committed").isEmpty)
   }
 
-  test("keyStats/colStatsFor attribute ranges by FULL PATH, not basename") {
+  test("keyStats/WriterStats.scan attribute ranges by FULL PATH, not basename") {
     val s = spark; import s.implicits._
     val t = freshTable()
     // Two files with IDENTICAL basenames in different subdirectories
@@ -255,8 +255,10 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     val ks = TxnLog.keyStats(spark, t, files, "id")
     assert(ks == Map("a/part-0.parquet" -> (1L, 10L),
       "b/part-0.parquet" -> (1000L, 2000L)))
-    val cs = TxnLog.colStatsFor(spark, t, files, Seq("id"))
-    assert(cs("id") == ks)
+    val cs = graft.sources.WriterStats.scan(spark, t, files,
+      graft.sources.WriterStats.footerSpec(spark, t, files,
+        graft.sources.WriterStats.Declared(colStatCols = Seq("id"))))
+    assert(cs.colStats("id") == ks)
     val counts = TxnLog.rowCounts(spark, t, files)
     assert(counts == Map("a/part-0.parquet" -> 10L,
       "b/part-0.parquet" -> 1001L))
@@ -275,26 +277,29 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     assert(counts.values.toSeq == Seq(3L))
   }
 
-  test("colStatsFor REFUSES non-integral and missing declared columns") {
+  test("WriterStats.scan REFUSES non-integral and missing declared columns") {
     val s = spark; import s.implicits._
     val t = freshTable()
     Seq((1L, "x", 1.5), (2L, "y", 2.5)).toDF("id", "name", "score")
       .coalesce(1).write.parquet(t.resolve("d").toString)
     val files = TxnLog.parquetsUnder(t, "d")
+    def colStats(c: String) = graft.sources.WriterStats.scan(spark, t, files,
+      graft.sources.WriterStats.footerSpec(spark, t, files,
+        graft.sources.WriterStats.Declared(colStatCols = Seq(c)))).colStats
     // Integral column: fine.
-    assert(TxnLog.colStatsFor(spark, t, files, Seq("id"))("id")
-      .values.toSeq == Seq((1L, 2L)))
+    assert(colStats("id")("id").values.toSeq == Seq((1L, 2L)))
     // A string column would cast to all-NULL = EmptyRange = every
-    // file wrongly pruned; a double silently truncates. Both refuse.
-    val e1 = intercept[RuntimeException](
-      TxnLog.colStatsFor(spark, t, files, Seq("name")))
+    // file wrongly pruned; a double silently truncates. Both refuse,
+    // as bound columns and as the key.
+    val e1 = intercept[RuntimeException](colStats("name"))
     assert(e1.getMessage.contains("non-integral"))
-    val e2 = intercept[RuntimeException](
-      TxnLog.colStatsFor(spark, t, files, Seq("score")))
+    val e2 = intercept[RuntimeException](colStats("score"))
     assert(e2.getMessage.contains("non-integral"))
-    val e3 = intercept[RuntimeException](
-      TxnLog.colStatsFor(spark, t, files, Seq("no_such_col")))
+    val e3 = intercept[RuntimeException](colStats("no_such_col"))
     assert(e3.getMessage.contains("does not exist"))
+    val e4 = intercept[RuntimeException](
+      TxnLog.keyStats(spark, t, files, "name"))
+    assert(e4.getMessage.contains("non-integral"))
   }
 
   // --- delta manifests (round 15): O(changed files) commit metadata ---
@@ -1072,7 +1077,9 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
       val fs = TxnLog.parquetsUnder(t, s"a$i")
       TxnLog.commitRetryWith(t, tp => tp.copy(action = "append",
         files = tp.files ++ fs,
-        ndv = TxnLog.ndvSketchFor(spark, t, fs, Seq("u")),
+        ndv = graft.sources.WriterStats.scan(spark, t, fs,
+          graft.sources.WriterStats.footerSpec(spark, t, fs,
+            graft.sources.WriterStats.Declared(ndvCols = Seq("u")))).ndv,
         txn = None, ts = 0L))
     }
     val tip = TxnLog.tip(t)
@@ -1302,7 +1309,7 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     def estimate(n: Long, base: Long, k: Int): Long = {
       // Max-heap of the k smallest flipped hashes — the same bottom-k
-      // the BottomKLongs aggregate maintains per file.
+      // WriterStats.Collector maintains per file.
       val pq = new java.util.PriorityQueue[java.lang.Long](
         k + 1, java.util.Comparator.reverseOrder[java.lang.Long]())
       var v = 0L
